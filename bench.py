@@ -211,6 +211,7 @@ def main() -> None:
     # matters; uniform inflation of the tiny ones does not.
     regressions: list[str] = []
     baseline_path = os.path.join(repo_dir, "BENCH_BASELINE.json")
+    base: dict[str, float] = {}
     if os.path.exists(baseline_path):
         with open(baseline_path) as f:
             base_doc = json.load(f)
@@ -246,7 +247,7 @@ def main() -> None:
     # ratio ≈ 1.3 on the same code), which two verdict cycles had to
     # establish by A/B archaeology — this field settles it in-line.
     epoch_ratio_median = None
-    if os.path.exists(baseline_path) and base:
+    if base:
         ratios = sorted(
             dt / base[name]
             for name, dt in timings.items()

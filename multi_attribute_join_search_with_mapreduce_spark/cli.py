@@ -9,7 +9,6 @@ Here::
     python -m multi_attribute_join_search_with_mapreduce_spark \
         --query-csv movie.csv --attrs director_name,movie_title \
         [--rows N] [--cores N] [--strategy dataframe|sql] \
-        [--plan rare_key|mapkey] \
         [--sf-dir /root/testdata/sf0.01] [--k 20] \
         [--write-index DIR | --read-index DIR] \
         [--floored-store DIR [--append-tables t1,t2] [--min-key-freq N]]
@@ -83,17 +82,6 @@ def build_parser() -> argparse.ArgumentParser:
         choices=("dataframe", "sql"),
         default="dataframe",
         help="DataFrame API (entry point A) or spark.sql surface (entry point C)",
-    )
-    p.add_argument(
-        "--plan",
-        choices=("rare_key", "mapkey", "row", "cell"),
-        default="rare_key",
-        help="dataframe-strategy physical plan: selectivity-ordered "
-        "rare-key probe (default) or the reference's mapkey fan-out "
-        "(Par_Search.py:244-285); results are identical. row/cell "
-        "accept the reference's -row/-cell granularity flags "
-        "(main.py:19-21) — subsumed aliases of the default probe "
-        "(identical results by construction, see search.py docstring)",
     )
     p.add_argument("--sf-dir", default=None, help="lake directory (default $SPARK_GRAFT_SF_DIR)")
     p.add_argument("--write-index", metavar="DIR", help="persist the posting index as parquet")
@@ -417,7 +405,7 @@ def main(argv: list[str] | None = None) -> int:
             postings = spark.read.parquet(f"{args.write_probed}/probed")
             q = spark.read.parquet(f"{args.write_probed}/query")
         tables, columns = multi_attribute_join_search(
-            postings, q, attrs, args.k, strategy=args.plan, top_n=args.top_n
+            postings, q, attrs, args.k, top_n=args.top_n
         )
 
     if args.explain:

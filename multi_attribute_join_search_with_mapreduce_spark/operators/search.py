@@ -11,22 +11,33 @@ reference's ``Seq_Search.py:78-93`` and ``Par_Search.py:89-119``):
    (``Par_Search.py:318-327``);
 4. result = top-k tables / top-2k columns by score (``Par_Search.py:329-330``).
 
-Spark-first design — one lazy Catalyst DAG, zero driver collects:
+Spark-first design — ONE plan builder (:func:`_search_plan`), one lazy
+Catalyst DAG, zero driver collects. The single search, its phase view
+(:func:`search_stages`) and the batch search all run the batch-shaped
+plan; a single search is a batch of one:
 
 - the reference probes Vertica once per query column and collects key
   lists to the driver (``Par_Search.py:172``, ``handlers.py:69-71``);
   here the probe is a **broadcast semi-join** of the posting index
   against the distinct query keys, so keys never leave the executors and
   the parquet scan receives the key filter as a runtime bloom/IN filter;
-- the thesis's pre-join reduction trick (drop ``(table,row)`` groups
-  with fewer than n matched keys *before* the mapping join,
-  ``Par_Search.py:244-250``) is kept — it is an application-level
-  semi-join Catalyst cannot invent, and it shrinks the expensive join's
-  input by orders of magnitude;
-- small sides (query keys, mappings) are explicitly ``broadcast()`` —
+- each query row probes on its rarest attribute only and verifies the
+  rest against a per-``(table,row)`` key map, which also applies the
+  thesis's pre-join reduction (drop ``(table,row)`` groups with fewer
+  than n matched keys, ``Par_Search.py:244-250``) — an
+  application-level semi-join Catalyst cannot invent;
+- the reference's row-, cell- and column-wise strategies and its MapKey
+  fan-out (``main.py:19-21``, ``Seq_Search.py:153-166``/``:203-215``,
+  ``Par_Search.py:244-285``) are subsumed: SURVEY.md §3.2 treats them
+  as variants of one contract that differ only in how the probe stream
+  is batched, never in which ``(table,row)`` groups reach n distinct key
+  hits, and the thesis measured identical results with column-wise the
+  fastest;
+- small sides (query keys, query rows) are explicitly ``broadcast()`` —
   a query table is thousands of rows against a 100 TB index;
 - aggregation is partial/final hash agg; top-k is
-  ``TakeOrderedAndProject`` via ``orderBy().limit()``.
+  ``TakeOrderedAndProject`` via ``orderBy().limit()`` for a single
+  search and a per-``qid`` window for a batch.
 
 Deterministic divergences from the reference (documented per SURVEY.md
 §2.11 "quirks to not replicate blindly"):
@@ -44,15 +55,14 @@ Deterministic divergences from the reference (documented per SURVEY.md
 - the pre-join reduction (kept from ``Par_Search.py:244-250``) counts
   *distinct probed keys per (table,row)*, so a query row with
   duplicated attribute values — e.g. ``(k, k)`` — matches a lake row
-  only when that row also contains other probed keys. Both strategies,
-  the SQL surface, and the DuckDB oracle implement this identically
+  only when that row also contains other probed keys. The DataFrame
+  plan, the SQL surface, and the DuckDB oracle implement this identically
   (property-tested in ``tests/test_search_properties.py``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -86,7 +96,7 @@ class SearchStages:
     columns: DataFrame  # scoring: top-2k column scores
 
 
-def _probe_broadcastable(query_df: DataFrame) -> bool:
+def _probe_broadcastable(*query_dfs: DataFrame) -> bool:
     """Auto decision for the query-derived broadcast hints.
 
     The explicit ``broadcast()`` hints on the probe side bypass
@@ -95,16 +105,18 @@ def _probe_broadcastable(query_df: DataFrame) -> bool:
     but wrong when a user probes with a FACT-sized query table, where a
     forced broadcast would OOM the driver. The auto path applies
     Catalyst's own rule to the probe's source: hint only when the
-    optimizer's size estimate of the RAW query table is within the
-    session's broadcast threshold. The raw estimate is a conservative
-    UPPER BOUND on the derived key set actually hinted (projection +
-    dedup only shrink it), so the check can suppress hints for a wide
-    query table whose kilobyte-scale key projection would merit one —
-    in that case AQE still converts to broadcast from runtime stats,
-    so the cost of the conservatism is one planning round, not a
-    missed broadcast.
+    optimizer's size estimate of the RAW query tables (summed over a
+    batch) is within the session's broadcast threshold. The raw estimate
+    is a conservative UPPER BOUND on the derived key set actually hinted
+    (projection + dedup only shrink it), and it is free for an in-memory
+    or file-backed table, where estimating the normalized query rows
+    means optimizing the normalizer's plan on every request. The check
+    can suppress hints for a wide query table whose kilobyte-scale key
+    projection would merit one — in that case AQE still converts to
+    broadcast from runtime stats, so the cost of the conservatism is one
+    planning round, not a missed broadcast.
     """
-    spark = query_df.sparkSession
+    spark = query_dfs[0].sparkSession
     try:
         raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
@@ -120,19 +132,20 @@ def _probe_broadcastable(query_df: DataFrame) -> bool:
     if thr <= 0:
         return False  # user disabled auto-broadcast: respect it
     try:
-        est = int(
-            query_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        est = sum(
+            int(q._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            for q in query_dfs
         )
     except Exception:
         return True  # no estimate (e.g. local relation): fixture-scale default
     return est <= thr
 
 
-def _hinter(query_df: DataFrame, broadcast_probe: bool | None):
+def _hinter(query_dfs: list[DataFrame], broadcast_probe: bool | None):
     """The broadcast-hint applicator for query-derived join sides:
     identity when the probe side must not be forced resident."""
     bcast = (
-        _probe_broadcastable(query_df) if broadcast_probe is None else broadcast_probe
+        _probe_broadcastable(*query_dfs) if broadcast_probe is None else broadcast_probe
     )
     return F.broadcast if bcast else (lambda df: df)
 
@@ -155,33 +168,28 @@ def _probe_index(postings: DataFrame, keys: DataFrame, hint) -> DataFrame:
     return postings.join(hint(keys), "key", "left_semi")
 
 
-def _query_mappings(query_df: DataFrame, attrs: list[str]) -> DataFrame:
-    """Normalize + dedup the query table; unpivot to (key, MapKey) pairs."""
-    norm = query_df.select(
-        *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
-    )
-    for i in range(len(attrs)):
-        norm = norm.filter(F.col(f"_a{i}") != "")
-    norm = norm.dropDuplicates()
-    norm = norm.withColumn(
-        "MapKey", F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(len(attrs))])
-    )
-    pairs = [
-        norm.select(F.col(f"_a{i}").alias("key"), "MapKey") for i in range(len(attrs))
-    ]
-    return reduce(DataFrame.unionByName, pairs)
-
-
 def multi_attribute_join_search(
     postings: DataFrame,
     query_df: DataFrame,
     attrs: list[str],
     k: int = DEFAULT_TOP_K,
-    strategy: str = "rare_key",
     broadcast_probe: bool | None = None,
     top_n: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Return ``(table_scores, column_scores)`` DataFrames.
+
+    The single search is the batch plan (:func:`_search_plan`) at B=1:
+    each query row joins postings on its globally *rarest* attribute
+    value only, and the remaining attributes are verified against a
+    per-``(table, row)`` key map, so partial matches (a row hitting one
+    common attribute but not the rest) never materialize. With a
+    frequent/rare attribute mix (e.g. brand × product-name) this cuts
+    the join input by orders of magnitude: probing ``part ⨝ part`` on 3
+    attributes at sf0.1 went 46s → ~3s against the reference's
+    all-pairs shape (``Par_Search.py:244-285``).
+
+    The reference's row-, cell- and mapkey-style strategies are
+    subsumed by this one plan (see the module docstring).
 
     ``broadcast_probe``: force (True) or suppress (False) the explicit
     broadcast hints on the query-derived join sides; ``None`` (default)
@@ -202,101 +210,9 @@ def multi_attribute_join_search(
 
     ``table_scores``: ``(table INT, join_score BIGINT)`` — top-k.
     ``column_scores``: ``(table INT, column INT, join_score BIGINT)`` — top-2k.
-
-    Strategies (identical results, differential-tested against each
-    other and the oracle):
-
-    - ``"rare_key"`` (default): selectivity-ordered probing. Each query
-      row joins postings on its globally *rarest* attribute value only;
-      the remaining attributes are verified against a per-``(table,
-      row)`` key set. Partial matches (row hits one common attribute
-      but not the rest) never materialize. With a frequent/rare
-      attribute mix (e.g. brand × product-name) this cuts the join
-      input by orders of magnitude: probing ``part ⨝ part`` on 3
-      attributes at sf0.1 went 46s → ~3s.
-    - ``"mapkey"``: the direct rendition of the reference's plan
-      (``Par_Search.py:244-285``) — join postings to every (key,
-      MapKey) pair, then keep ``(table,row,MapKey)`` groups hitting all
-      n attributes. Fan-out is Σ freq(attr value) over all query
-      attrs, which explodes when an attribute has few distinct values.
-    - ``"row"`` / ``"cell"``: the reference's row-wise and cell-wise
-      granularity strategies (``main.py:19-21``, ``Seq_Search.py:
-      153-166`` row, ``:203-215`` cell). The thesis measured them
-      strictly slower than column-wise with identical results, and
-      SURVEY.md §3.2 treats all three as granularity variants of one
-      contract — probing per row (or per cell) only changes how the
-      probe stream is batched, never which ``(table,row)`` groups
-      reach n distinct key hits. They are therefore aliases of the
-      default probe here (differential-tested in
-      ``tests/test_search_properties.py``); a Catalyst plan has no
-      per-row round trips to batch differently in the first place.
     """
-    _validate_top_n(top_n)
-    if strategy in ("rare_key", "row", "cell"):
-        st = _rare_key_stages(postings, query_df, attrs, k, broadcast_probe, top_n)
-        return st.tables, st.columns
-    if strategy != "mapkey":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    hint = _hinter(query_df, broadcast_probe)
-    n = len(attrs)
-    rank_n = n if top_n is None else top_n
-    mappings = _query_mappings(query_df, attrs)
-    keys = mappings.select("key").distinct()
-
-    # Probe: semi-join the index with the (small, broadcast) key set.
-    probed = _probe_index(postings, keys, hint)
-
-    # One explicit (table,row) shuffle that every downstream op reuses:
-    # hash-partitioning on (table,row) satisfies the dedup groupBy's
-    # (table,row,key) clustering (subset rule), the reduction window,
-    # and the (table,row,MapKey) match window — without it each of
-    # those would re-shuffle the full posting stream.
-    deduped = (
-        probed.repartition("table", "row")
-        .groupBy("table", "row", "key")
-        .agg(F.min("column").alias("column"))
-    )
-
-    # Pre-join reduction: a (table,row) can only be a match if it hit
-    # >= n distinct query keys (Par_Search.py:244-250's trick).
-    w_row = Window.partitionBy("table", "row")
-    reduced = (
-        deduped.withColumn("_cnt", F.count(F.lit(1)).over(w_row))
-        .filter(F.col("_cnt") >= n)
-        .drop("_cnt")
-    )
-
-    # Attribute matched postings to query rows; keep (table,row,MapKey)
-    # groups where all n attributes of that query row hit.
-    mapped = reduced.join(hint(mappings), "key")
-    w_match = Window.partitionBy("table", "row", "MapKey")
-    matches = (
-        mapped.withColumn("_cnt", F.count(F.lit(1)).over(w_match))
-        .filter(F.col("_cnt") >= n)
-        .drop("_cnt")
-    )
-
-    col_scores_all = matches.groupBy("table", "column").agg(
-        F.count(F.lit(1)).alias("join_score")
-    )
-    w_rank = Window.partitionBy("table").orderBy(
-        F.desc("join_score"), F.asc("column")
-    )
-    top_cols = (
-        col_scores_all.withColumn("_rn", F.row_number().over(w_rank))
-        .filter(F.col("_rn") <= rank_n)
-        .drop("_rn")
-    )
-    table_scores = (
-        top_cols.groupBy("table")
-        .agg(F.sum("join_score").alias("join_score"))
-        .orderBy(F.desc("join_score"), F.asc("table"))
-        .limit(k)
-    )
-    column_scores = top_cols.orderBy(
-        F.desc("join_score"), F.asc("table"), F.asc("column")
-    ).limit(2 * k)
-    return table_scores, column_scores
+    st = search_stages(postings, query_df, attrs, k, broadcast_probe, top_n)
+    return st.tables, st.columns
 
 
 def search_stages(
@@ -307,27 +223,58 @@ def search_stages(
     broadcast_probe: bool | None = None,
     top_n: int | None = None,
 ) -> SearchStages:
-    """Public phase-exposing variant of the default (rare_key) search —
+    """Phase-exposing form of :func:`multi_attribute_join_search` —
     used by ``bench.py`` for the reference's 4-phase wall-clock
-    breakdown (``log_runtime``, ``Par_Search.py:16-32``)."""
-    _validate_top_n(top_n)
-    return _rare_key_stages(postings, query_df, attrs, k, broadcast_probe, top_n)
+    breakdown (``log_runtime``, ``Par_Search.py:16-32``).
+
+    The stages are the very DataFrames the scoring plan is built on, not
+    projections of them, so a caller that persists one stage has the
+    later stages read it from the cache."""
+    melted, deduped, matched, top_cols = _search_plan(
+        postings, [(0, query_df, attrs)], broadcast_probe, top_n
+    )
+    # Grouping on (qid, table) rather than table alone: top_cols is
+    # already partitioned by (qid, table) from the rank window, so the
+    # sum needs no exchange of its own. qid is constant at B=1.
+    tables = (
+        top_cols.groupBy("qid", "table")
+        .agg(F.sum("join_score").alias("join_score"))
+        .drop("qid")
+        .orderBy(F.desc("join_score"), F.asc("table"))
+        .limit(k)
+    )
+    columns = (
+        top_cols.select("table", "column", "join_score")
+        .orderBy(F.desc("join_score"), F.asc("table"), F.asc("column"))
+        .limit(2 * k)
+    )
+    return SearchStages(
+        mappings=melted, probed=deduped, matched=matched, tables=tables, columns=columns
+    )
 
 
-def _rare_key_stages(
+def _search_plan(
     postings: DataFrame,
-    query_df: DataFrame,
-    attrs: list[str],
-    k: int = DEFAULT_TOP_K,
-    broadcast_probe: bool | None = None,
-    top_n: int | None = None,
-) -> SearchStages:
-    """Selectivity-ordered probe (see :func:`multi_attribute_join_search`).
+    batch: list[tuple],
+    broadcast_probe: bool | None,
+    top_n: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """THE search plan: B query tables answered in one pass over the
+    posting index. Returns ``(melted, deduped, matched, top_cols)``;
+    every per-query frame is keyed by ``qid``, and ``top_cols`` holds
+    ``(qid, table, column, join_score, _rank_n)`` — each table's best
+    ``_rank_n`` column scores. The callers add the top-k finish.
+
+    ``batch`` entries are ``(qid, query_df, attrs[, entry_top_n])``;
+    the rank bound resolves as entry ``top_n`` > ``top_n`` > attr count.
+    Attributes travel as an ``array<string>`` column, so queries with
+    different attribute counts share one DAG.
 
     Pipeline, one lazy DAG:
 
-    1. normalize+dedup query rows; broadcast-semi-join probe of the
-       (persisted) posting index;
+    1. normalize the query rows, dedup them in ONE exchange over the
+       union, and broadcast-semi-join probe the (persisted) posting
+       index with the distinct keys;
     2. ``freq``: frequency of each probed key, computed straight off the
        cheap pre-dedup probe (the rarest-attribute choice is a
        selectivity heuristic — any consistent frequency source yields
@@ -337,35 +284,67 @@ def _rare_key_stages(
        zero-frequency attribute are dropped (they cannot match);
     4. ``kc``: ONE ``(table,row)`` shuffle builds the per-row
        key->column map AND applies the pre-join reduction as a
-       post-aggregation size filter (``size(_m) >= n`` — the thesis's
-       window trick, Par_Search.py:244-250, folded into the aggregate
-       so no separate window pass);
+       post-aggregation size filter (``size(_m) >=`` the smallest n in
+       the batch — the thesis's window trick, Par_Search.py:244-250,
+       folded into the aggregate so no separate window pass);
     5. ``hits`` = kc exploded back to key granularity (fan-out ≤ the
-       table's indexed-column count, ≤3 here) ⨝ broadcast probe on
+       table's indexed-column count) ⨝ broadcast probe on
        ``key = probe_key``, carrying ``_m`` along — verification and
        column attribution are then native map lookups with NO
        (table,row) self-join. This matters for more than readability:
        a self-join re-aliases expression ids, defeating Spark's
        exchange-reuse rule, so the r1 shape recomputed the probe+dedup
        subtree (and its shuffle) three times per query.
+
+    Why batch-shaped: at 100 TB the dominant cost is the index-side work
+    — the probe scan, the ``(table,row)`` shuffle, and the key-map
+    build. Those depend only on the UNION of probed keys, not on which
+    query contributed them, so they run once and the per-query work
+    (rarest-attribute choice, verification, scoring) rides on
+    broadcast-sized query metadata.
     """
-    hint = _hinter(query_df, broadcast_probe)
-    n = len(attrs)
-    rank_n = n if top_n is None else top_n
-    norm = query_df.select(
-        *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
-    )
-    for i in range(n):
-        norm = norm.filter(F.col(f"_a{i}") != "")
-    norm = norm.dropDuplicates()
-    norm = norm.withColumn(
-        "MapKey", F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(n)])
-    )
-    attr_cols = [F.col(f"_a{i}") for i in range(n)]
-    melted = norm.select(
-        "MapKey", F.explode(F.array(*attr_cols)).alias("key")
-    )
+    _validate_top_n(top_n)
+    qrows = None
+    ns, rank_ns = [], []
+    for entry in batch:
+        qid, query_df, attrs = entry[0], entry[1], entry[2]
+        entry_top_n = entry[3] if len(entry) > 3 else None
+        _validate_top_n(entry_top_n)
+        eff_top_n = entry_top_n if entry_top_n is not None else top_n
+        n = len(attrs)
+        ns.append(n)
+        rank_ns.append(eff_top_n if eff_top_n is not None else n)
+        norm = query_df.select(
+            *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
+        )
+        for i in range(n):
+            norm = norm.filter(F.col(f"_a{i}") != "")
+        q = norm.select(
+            F.lit(qid).alias("qid"),
+            F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(n)]).alias(
+                "MapKey"
+            ),
+            F.array(*[F.col(f"_a{i}") for i in range(n)]).alias("_attrs"),
+            F.lit(n).alias("_n"),
+            F.lit(rank_ns[-1]).alias("_rank_n"),
+        )
+        qrows = q if qrows is None else qrows.unionByName(q)
+    # ONE dedup exchange over the unioned query metadata instead of one
+    # per entry: the normalizer's alphabet is [a-z0-9 ], so the
+    # US-joined MapKey is injective over the normalized attribute tuple
+    # (within a qid, whose n is fixed) and (qid, MapKey) determines every
+    # other column — a whole-row dedup keeps the same rows. Whole-row,
+    # not dropDuplicates(["qid", "MapKey"]): the subset form carries
+    # _attrs through First(), whose array buffer forces sort-based
+    # aggregation (a SortAggregate + Sort per use of qrows).
+    qrows = qrows.dropDuplicates()
+
+    melted = qrows.select("qid", "MapKey", "_n", F.explode("_attrs").alias("key"))
     keys = melted.select("key").distinct()
+    # The union of B query tables is still probe-side, so a fact-sized
+    # batch degrades to AQE-chosen strategies instead of a forced
+    # broadcast.
+    hint = _hinter([entry[1] for entry in batch], broadcast_probe)
 
     probed = _probe_index(postings, keys, hint)
 
@@ -374,22 +353,24 @@ def _rare_key_stages(
     # on key — it shares nothing heavy with the match pipeline below.
     freq = probed.groupBy("key").agg(F.count(F.lit(1)).alias("_freq"))
     with_freq = freq.join(hint(melted), "key")
-    w_rare = Window.partitionBy("MapKey").orderBy(F.asc("_freq"), F.asc("key"))
+    w_row = Window.partitionBy("qid", "MapKey")
     rarest = (
-        with_freq.withColumn("_rn", F.row_number().over(w_rare))
-        .withColumn("_n_present", F.count(F.lit(1)).over(Window.partitionBy("MapKey")))
+        with_freq.withColumn(
+            "_rn", F.row_number().over(w_row.orderBy(F.asc("_freq"), F.asc("key")))
+        )
+        .withColumn("_n_present", F.count(F.lit(1)).over(w_row))
         # early drop: an attr instance with zero lake frequency means the
         # row can never match (verification would drop it later anyway)
-        .filter((F.col("_rn") == 1) & (F.col("_n_present") == n))
-        .select("MapKey", F.col("key").alias("probe_key"))
+        .filter((F.col("_rn") == 1) & (F.col("_n_present") == F.col("_n")))
+        .select("qid", "MapKey", F.col("key").alias("probe_key"))
     )
-    probe = rarest.join(norm, "MapKey")
+    probe = rarest.join(qrows, ["qid", "MapKey"])
 
     # THE (table,row) shuffle — the only fact-sized exchange in the
-    # pipeline. Dedup (min column per key) and the per-row key/column
-    # set build both run on it (groupBy(table,row[,key]) clustering is
-    # satisfied by hashpartitioning(table,row)); the pre-join reduction
-    # is the size filter on the aggregated array.
+    # pipeline, batch-invariant. Dedup (min column per key) and the
+    # per-row key/column map build both run on it (groupBy(table,row
+    # [,key]) clustering is satisfied by hashpartitioning(table,row));
+    # the pre-join reduction is the size filter on the aggregated map.
     deduped = (
         probed.repartition("table", "row")
         .groupBy("table", "row", "key")
@@ -407,57 +388,49 @@ def _rare_key_stages(
         .agg(
             F.map_from_entries(F.collect_list(F.struct("key", "column"))).alias("_m")
         )
-        .filter(F.size("_m") >= n)
+        .filter(F.size("_m") >= min(ns))
     )
 
-    # Back to key granularity (fan-out = keys per row ≤ indexed columns
-    # per table) and broadcast-join the probe; _m rides along so
-    # verification + column attribution are map lookups — no second
-    # pass over the postings, no (table,row) self-join.
+    # Back to key granularity and broadcast-join the probe; _m rides
+    # along so verification + column attribution are map lookups — no
+    # second pass over the postings, no (table,row) self-join.
     hits = kc.select(
         "table", "row", "_m", F.explode(F.map_keys("_m")).alias("key")
     ).join(hint(probe), F.col("key") == F.col("probe_key"))
 
+    # Verification: every attr of the query row is a key of the row's
+    # map. One map lookup per attr position, not forall(_attrs, a ->
+    # _m[a] IS NOT NULL): a lambda is CodegenFallback, and as the join
+    # condition it pulls the whole probe_key join out of whole-stage
+    # codegen. get() is NULL past a shorter query's last attr (attrs are
+    # never NULL), and lookups beat array_except(_attrs, map_keys(_m)),
+    # which builds a hash set per hit (execution 18-42% slower on a
+    # 3-attr sf0.1 search where every row verifies, 4 cores).
     verified = hits
-    for i in range(n):
-        verified = verified.filter(F.col("_m")[F.col(f"_a{i}")].isNotNull())
+    for i in range(max(ns)):
+        a_i = F.get("_attrs", i)
+        verified = verified.filter(a_i.isNull() | F.col("_m")[a_i].isNotNull())
 
     matched = verified.select(
-        "table",
-        "row",
-        "MapKey",
-        "_m",
-        F.explode(F.array(*[F.col(f"_a{i}") for i in range(n)])).alias("_mk"),
-    ).select(
-        "table",
-        F.col("_m")[F.col("_mk")].alias("column"),
-    )
+        "qid", "_rank_n", "table", "_m", F.explode("_attrs").alias("_mk")
+    ).select("qid", "_rank_n", "table", F.col("_m")[F.col("_mk")].alias("column"))
 
-    col_scores_all = matched.groupBy("table", "column").agg(
-        F.count(F.lit(1)).alias("join_score")
+    col_scores_all = matched.groupBy("qid", "table", "column").agg(
+        F.count(F.lit(1)).alias("join_score"), F.min("_rank_n").alias("_rank_n")
     )
-    w_rank = Window.partitionBy("table").orderBy(F.desc("join_score"), F.asc("column"))
+    w_rank = Window.partitionBy("qid", "table").orderBy(
+        F.desc("join_score"), F.asc("column")
+    )
+    # _rank_n is each entry's resolved rank bound, constant per qid. The
+    # literal conjunct is redundant for the result but lets the optimizer
+    # push a WindowGroupLimit below the rank window, which a
+    # column-valued bound alone does not.
     top_cols = (
         col_scores_all.withColumn("_rn", F.row_number().over(w_rank))
-        .filter(F.col("_rn") <= rank_n)
+        .filter((F.col("_rn") <= F.col("_rank_n")) & (F.col("_rn") <= max(rank_ns)))
         .drop("_rn")
     )
-    table_scores = (
-        top_cols.groupBy("table")
-        .agg(F.sum("join_score").alias("join_score"))
-        .orderBy(F.desc("join_score"), F.asc("table"))
-        .limit(k)
-    )
-    column_scores = top_cols.orderBy(
-        F.desc("join_score"), F.asc("table"), F.asc("column")
-    ).limit(2 * k)
-    return SearchStages(
-        mappings=melted,
-        probed=deduped,
-        matched=matched,
-        tables=table_scores,
-        columns=column_scores,
-    )
+    return melted, deduped, matched, top_cols
 
 
 def multi_attribute_join_search_batch(
@@ -473,20 +446,11 @@ def multi_attribute_join_search_batch(
     Returns ``(tables, columns)`` with a leading ``qid`` column; per
     ``qid`` the rows equal the single-query search exactly
     (differential-tested query-by-query and against the SQL oracle).
-
-    Why this exists: at 100 TB the dominant cost is the index-side work
-    — the probe scan, the ``(table,row)`` shuffle, and the per-row
-    key/column-set build. Those depend only on the UNION of probed
-    keys, not on which query contributed them, so the batch runs them
-    once and the per-query work (rarest-attribute choice, verification,
-    scoring) rides on broadcast-sized query metadata. Exchanges in the
-    plan are CONSTANT in B (gated by ``tests/test_search_batch.py``);
-    B sequential searches would pay the fact-sized shuffle B times.
-
-    Differences from :func:`_rare_key_stages` are representational:
-    attributes travel as an ``array<string>`` column (so queries with
-    different attribute counts share one DAG) and every per-query
-    stage keys on ``(qid, MapKey)`` instead of ``MapKey``.
+    Both run :func:`_search_plan`; the batch finishes with per-qid
+    top-k windows where the single search uses ``orderBy().limit()``.
+    Index-side work in the plan is CONSTANT in B (gated by
+    ``tests/test_search_batch.py``); B sequential searches would pay the
+    fact-sized shuffle B times.
 
     Heterogeneous dialects (VERDICT r8 task #7): each batch entry may
     carry its own scoring rank bound as an optional 4th element —
@@ -496,120 +460,7 @@ def multi_attribute_join_search_batch(
     ``_n``), so the shared index-side plan is unchanged. Precedence:
     entry ``top_n`` > batch-wide ``top_n`` > that entry's attr count.
     """
-    _validate_top_n(top_n)
-    qrows = None
-    for entry in batch:
-        qid, query_df, attrs = entry[0], entry[1], entry[2]
-        entry_top_n = entry[3] if len(entry) > 3 else None
-        _validate_top_n(entry_top_n)
-        eff_top_n = entry_top_n if entry_top_n is not None else top_n
-        n = len(attrs)
-        rank_n = eff_top_n if eff_top_n is not None else n
-        norm = query_df.select(
-            *[normalize_col(F.col(a)).alias(f"_a{i}") for i, a in enumerate(attrs)]
-        )
-        for i in range(n):
-            norm = norm.filter(F.col(f"_a{i}") != "")
-        q = norm.select(
-            F.lit(qid).alias("qid"),
-            F.concat_ws(MAPKEY_SEP, *[F.col(f"_a{i}") for i in range(n)]).alias(
-                "MapKey"
-            ),
-            F.array(*[F.col(f"_a{i}") for i in range(n)]).alias("_attrs"),
-            F.lit(n).alias("_n"),
-            F.lit(rank_n).alias("_rank_n"),
-        )
-        qrows = q if qrows is None else qrows.unionByName(q)
-    # ONE dedup exchange over the unioned query metadata instead of one
-    # dropDuplicates() shuffle per entry: the normalizer's alphabet is
-    # [a-z0-9 ], so the US-joined MapKey is injective over the
-    # normalized attribute tuple (within a qid, whose n is fixed) and
-    # (qid, MapKey) determines every other column — same rows as the
-    # per-entry dedup, B exchanges fewer per plan instantiation.
-    qrows = qrows.dropDuplicates(["qid", "MapKey"])
-
-    melted = qrows.select("qid", "MapKey", "_n", F.explode("_attrs").alias("key"))
-    keys = melted.select("key").distinct()
-    # Same hint discipline as the single-query form: the union of B
-    # query tables is still probe-side, so a fact-sized batch degrades
-    # to AQE-chosen strategies instead of a forced broadcast.
-    hint = _hinter(qrows, broadcast_probe)
-
-    probed = _probe_index(postings, keys, hint)
-
-    freq = probed.groupBy("key").agg(F.count(F.lit(1)).alias("_freq"))
-    with_freq = freq.join(hint(melted), "key")
-    w_rare = Window.partitionBy("qid", "MapKey").orderBy(F.asc("_freq"), F.asc("key"))
-    rarest = (
-        with_freq.withColumn("_rn", F.row_number().over(w_rare))
-        .withColumn(
-            "_n_present", F.count(F.lit(1)).over(Window.partitionBy("qid", "MapKey"))
-        )
-        .filter((F.col("_rn") == 1) & (F.col("_n_present") == F.col("_n")))
-        .select("qid", "MapKey", F.col("key").alias("probe_key"))
-    )
-    probe = rarest.join(qrows, ["qid", "MapKey"])
-
-    # Index-side heavy path — batch-invariant, built once over the
-    # union key set (same shape as the single-query plan).
-    deduped = (
-        probed.repartition("table", "row")
-        .groupBy("table", "row", "key")
-        .agg(F.min("column").alias("column"))
-    )
-    min_n = min(len(entry[2]) for entry in batch)
-    # key->column map for codegen-able verification — see the
-    # _rare_key_stages comment (array-of-struct higher-order lookups
-    # are interpreted per hit).
-    kc = (
-        deduped.groupBy("table", "row")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("key", "column"))).alias("_m")
-        )
-        .filter(F.size("_m") >= min_n)
-    )
-
-    hits = kc.select(
-        "table",
-        "row",
-        "_m",
-        F.explode(F.map_keys("_m")).alias("key"),
-    ).join(hint(probe), F.col("key") == F.col("probe_key"))
-
-    # forall over the heterogeneous attr array: presence of every attr
-    # in the row's key map. The map lookup inside the lambda is still
-    # a GetMapValue over the single _m map — only the n_attrs-sized
-    # outer loop is a higher-order function.
-    verified = hits.filter(
-        F.forall("_attrs", lambda a: F.element_at(F.col("_m"), a).isNotNull())
-    )
-
-    matched = verified.select(
-        "qid",
-        "_rank_n",
-        "table",
-        F.explode("_attrs").alias("_mk"),
-        "_m",
-    ).select(
-        "qid",
-        "_rank_n",
-        "table",
-        F.col("_m")[F.col("_mk")].alias("column"),
-    )
-
-    col_scores_all = matched.groupBy("qid", "table", "column").agg(
-        F.count(F.lit(1)).alias("join_score"), F.min("_rank_n").alias("_rank_n")
-    )
-    w_rank = Window.partitionBy("qid", "table").orderBy(
-        F.desc("join_score"), F.asc("column")
-    )
-    # Per-query scoring dialect: _rank_n is each entry's resolved rank
-    # bound (entry top_n > batch top_n > attr count), constant per qid.
-    top_cols = (
-        col_scores_all.withColumn("_rn", F.row_number().over(w_rank))
-        .filter(F.col("_rn") <= F.col("_rank_n"))
-        .drop("_rn")
-    )
+    _, _, _, top_cols = _search_plan(postings, batch, broadcast_probe, top_n)
     w_tab = Window.partitionBy("qid").orderBy(F.desc("join_score"), F.asc("table"))
     table_scores = (
         top_cols.groupBy("qid", "table")

@@ -44,7 +44,7 @@ def test_bucketed_self_join_has_no_index_side_shuffle(spark, sf_dir, bucketed_ta
 
 def test_hashed_index_layout_exact_and_probes_on_hash(spark, sf_dir):
     """The fixed-width layout (hashed_keys=True): search results are
-    IDENTICAL to the plain index on both strategies, and the probe
+    IDENTICAL to the plain index, and the probe
     semi-join actually runs on the 8-byte xxhash64 column, not the raw
     string key."""
     import re
@@ -61,15 +61,10 @@ def test_hashed_index_layout_exact_and_probes_on_hash(spark, sf_dir):
         assert "key_h" in hashed.columns
         plain = build_posting_index(spark, sf_dir)
         q = load_table(spark, "part", sf_dir)
-        for strategy in ("rare_key", "mapkey"):
-            t_h, c_h = multi_attribute_join_search(
-                hashed, q, ["p_brand", "p_type"], strategy=strategy
-            )
-            t_p, c_p = multi_attribute_join_search(
-                plain, q, ["p_brand", "p_type"], strategy=strategy
-            )
-            assert t_h.collect() == t_p.collect()
-            assert c_h.collect() == c_p.collect()
+        t_h, c_h = multi_attribute_join_search(hashed, q, ["p_brand", "p_type"])
+        t_p, c_p = multi_attribute_join_search(plain, q, ["p_brand", "p_type"])
+        assert t_h.collect() == t_p.collect()
+        assert c_h.collect() == c_p.collect()
         # the probe join condition is on key_h (8 bytes), not key: the
         # executedPlan tree prints join keys inline on the node line
         plan = t_h._jdf.queryExecution().executedPlan().toString()
@@ -84,9 +79,8 @@ def test_hashed_index_layout_exact_and_probes_on_hash(spark, sf_dir):
 
 
 def test_batch_search_over_hashed_index_exact(spark, sf_dir):
-    """The batch form's probe (the third _probe_index call site) also
-    detects the hashed layout and returns results identical to the
-    plain index."""
+    """The batch form's probe also detects the hashed layout and returns
+    results identical to the plain index."""
     from multi_attribute_join_search_with_mapreduce_spark.operators.search import (
         multi_attribute_join_search_batch,
     )

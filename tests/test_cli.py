@@ -220,23 +220,6 @@ def test_read_csv_source_url(spark, query_csv, capsys):
         srv.shutdown()
 
 
-def test_cli_mapkey_plan_matches_rare_key(spark, capsys, query_csv):
-    """--plan mapkey (the reference's Par_Search shape) must print the
-    same scores as the default selectivity-ordered plan."""
-    rc, out = _run(
-        capsys,
-        ["--query-csv", query_csv, "--attrs", "brand,type", "--sf-dir", SF001,
-         "--plan", "mapkey"],
-    )
-    assert rc == 0
-    rc2, out2 = _run(
-        capsys,
-        ["--query-csv", query_csv, "--attrs", "brand,type", "--sf-dir", SF001],
-    )
-    assert rc2 == 0
-    assert out == out2
-
-
 def test_cli_explain_prints_plan_without_executing(spark, capsys, query_csv):
     rc, out = _run(
         capsys,

@@ -144,6 +144,59 @@ def test_search_probe_is_broadcast_semi_join(spark, sf_dir):
     assert "BroadcastHashJoin Inner" in plan
 
 
+def _final_plan(df) -> str:
+    """The executed adaptive plan after an action, without the initial plan."""
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def _assert_verification_in_codegen(plan: str) -> None:
+    """Verification must stay map lookups: a higher-order function over
+    the row's key map (``forall``/lambda) is CodegenFallback and drags the
+    probe_key join out of whole-stage codegen. The query-side normalizer's
+    own lambda (stopword filter) is not on the key map and is allowed."""
+    import re
+
+    assert "forall(" not in plan, plan
+    map_lines = [ln for ln in plan.splitlines() if "_m#" in ln]
+    assert not [ln for ln in map_lines if "lambdafunction" in ln], plan
+    probe = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln and "probe_key#" in ln]
+    assert probe, plan
+    assert all(re.match(r"^[\s:+\-|]*\*\(\d+\) BroadcastHashJoin", ln) for ln in probe), (
+        "probe_key join runs outside whole-stage codegen:\n" + "\n".join(probe)
+    )
+
+
+def test_search_verification_stays_in_codegen(spark, sf_dir):
+    """The single search and the batch share one plan; both must keep the
+    probe_key join code-generated, and the single search keeps its top-k
+    finish: a WindowGroupLimit under the rank window and one
+    TakeOrderedAndProject per result."""
+    from multi_attribute_join_search_with_mapreduce_spark.index import cached_posting_index
+    from multi_attribute_join_search_with_mapreduce_spark.operators.search import (
+        multi_attribute_join_search,
+        multi_attribute_join_search_batch,
+    )
+    from multi_attribute_join_search_with_mapreduce_spark.sources.lake import load_table
+
+    postings = cached_posting_index(spark, sf_dir)
+    part = load_table(spark, "part", sf_dir)
+    attrs = ["p_brand", "p_type"]
+
+    tables, columns = multi_attribute_join_search(postings, part, attrs)
+    tables.collect()
+    columns.collect()
+    single = [_final_plan(tables), _final_plan(columns)]
+    for plan in single:
+        _assert_verification_in_codegen(plan)
+        assert "WindowGroupLimit" in plan, plan
+    assert sum(plan.count("TakeOrderedAndProject") for plan in single) == 2
+
+    batch = [("part2", part, attrs), ("nation1", load_table(spark, "nation", sf_dir), ["n_name"])]
+    b_tables, _ = multi_attribute_join_search_batch(postings, batch)
+    b_tables.collect()
+    _assert_verification_in_codegen(_final_plan(b_tables))
+
+
 def test_filters_and_projection_reach_the_scan(spark, sf_dir):
     """Scale evidence: Q6's predicates must be pushed to the parquet
     reader and its scan schema pruned to the referenced columns — a scan

@@ -55,17 +55,12 @@ def _fixture_query(spark):
     return spark.createDataFrame(rows, "director string, title string")
 
 
-import pytest
-
-
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
-def test_golden_scores(spark, strategy):
+def test_golden_scores(spark):
     tbl, col = multi_attribute_join_search(
         _fixture_postings(spark),
         _fixture_query(spark),
         ["director", "title"],
         k=20,
-        strategy=strategy,
     )
     tbl_rows = [(r["table"], r["join_score"]) for r in tbl.collect()]
     # table 4: 2 matching rows x 2 cols = 4; table 1: 1 row x 2 cols = 2;
@@ -131,19 +126,7 @@ def test_wide_lake_index_and_discovery(spark, sf_dir):
     assert tbl_n.count() == 0  # the 5-dim index has no such joins
 
 
-def test_strategies_agree_three_attrs(spark, sf_dir):
-    """rare_key and mapkey must be result-identical (n=3, real data)."""
-    postings = build_posting_index(spark, sf_dir)
-    query_df = spark.read.parquet(f"{sf_dir}/part.parquet")
-    attrs = ["p_name", "p_brand", "p_type"]
-    t_rare, c_rare = multi_attribute_join_search(postings, query_df, attrs, strategy="rare_key")
-    t_map, c_map = multi_attribute_join_search(postings, query_df, attrs, strategy="mapkey")
-    assert t_rare.collect() == t_map.collect()
-    assert c_rare.collect() == c_map.collect()
-
-
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
-def test_seq_top2_scoring_dialect(spark, sf_dir, strategy):
+def test_seq_top2_scoring_dialect(spark, sf_dir):
     """``top_n=2`` reproduces Seq-Search's table scoring (Object.py:78-79
     sums the top TWO column counters regardless of attribute count),
     where the default is Par's top-col_count (Par_Search.py:318-327).
@@ -152,10 +135,8 @@ def test_seq_top2_scoring_dialect(spark, sf_dir, strategy):
     postings = build_posting_index(spark, sf_dir)
     query_df = spark.read.parquet(f"{sf_dir}/part.parquet")
     attrs = ["p_name", "p_brand", "p_type"]
-    t_seq, _ = multi_attribute_join_search(
-        postings, query_df, attrs, strategy=strategy, top_n=2
-    )
-    t_par, _ = multi_attribute_join_search(postings, query_df, attrs, strategy=strategy)
+    t_seq, _ = multi_attribute_join_search(postings, query_df, attrs, top_n=2)
+    t_par, _ = multi_attribute_join_search(postings, query_df, attrs)
     seq_rows = [(r["table"], r["join_score"]) for r in t_seq.collect()]
     par_rows = [(r["table"], r["join_score"]) for r in t_par.collect()]
     assert seq_rows != par_rows  # the knob actually changes the semantics
@@ -166,25 +147,13 @@ def test_seq_top2_scoring_dialect(spark, sf_dir, strategy):
     )
 
 
-def test_unknown_strategy_raises(spark, sf_dir):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown strategy"):
-        multi_attribute_join_search(
-            _fixture_postings(spark), _fixture_query(spark), ["director", "title"],
-            strategy="bogus",
-        )
-
-
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
-def test_single_attribute_search(spark, strategy):
+def test_single_attribute_search(spark):
     """n=1: every row containing the attribute is a match; no reduction
     or cross-attribute verification is involved."""
     tbl, col = multi_attribute_join_search(
         _fixture_postings(spark),
         spark.createDataFrame([("James Cameron",)], "director string"),
         ["director"],
-        strategy=strategy,
     )
     scores = {r.table: r.join_score for r in tbl.collect()}
     # james cameron appears in tables 1 (rows 3,4), 3 (row 1), 4 (rows 10,11)
@@ -192,19 +161,16 @@ def test_single_attribute_search(spark, strategy):
     assert all(r.join_score > 0 for r in col.collect())
 
 
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
-def test_no_match_returns_empty(spark, strategy):
+def test_no_match_returns_empty(spark):
     tbl, col = multi_attribute_join_search(
         _fixture_postings(spark),
         spark.createDataFrame([("Nobody", "Nothing")], "director string, title string"),
         ["director", "title"],
-        strategy=strategy,
     )
     assert tbl.count() == 0 and col.count() == 0
 
 
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
-def test_null_and_empty_normalizing_rows_are_dropped(spark, strategy):
+def test_null_and_empty_normalizing_rows_are_dropped(spark):
     """Rows with NULL or punctuation-only (normalizes to '') attributes
     cannot match; a valid row alongside them still scores."""
     q = spark.createDataFrame(
@@ -216,8 +182,6 @@ def test_null_and_empty_normalizing_rows_are_dropped(spark, strategy):
         ],
         "director string, title string",
     )
-    tbl, _ = multi_attribute_join_search(
-        _fixture_postings(spark), q, ["director", "title"], strategy=strategy
-    )
+    tbl, _ = multi_attribute_join_search(_fixture_postings(spark), q, ["director", "title"])
     scores = {r.table: r.join_score for r in tbl.collect()}
     assert scores == {4: 4, 1: 2, 3: 2}

@@ -1,5 +1,5 @@
-"""Property test: both search strategies agree with an independent
-brute-force Python oracle on randomized posting/query tables.
+"""Property test: the search agrees with an independent brute-force
+Python oracle on randomized posting/query tables.
 
 The oracle re-implements the §2.11 contract directly from its
 definition (set-membership matches, min-column attribution, top-n
@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -74,15 +73,14 @@ def _python_oracle(postings, query_rows, n_attrs=2, k=20, top_n=None):
     return table_scores, dict(col_scores)
 
 
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(postings=posting_strategy, query=query_strategy)
-def test_strategies_match_python_oracle(spark, strategy, postings, query):
+def test_search_matches_python_oracle(spark, postings, query):
     pdf = spark.createDataFrame(
         postings, "key string, table int, column int, row bigint"
     )
     qdf = spark.createDataFrame(query, "a string, b string")
-    tbl, col = multi_attribute_join_search(pdf, qdf, ["a", "b"], strategy=strategy)
+    tbl, col = multi_attribute_join_search(pdf, qdf, ["a", "b"])
     got_tables = {r.table: r.join_score for r in tbl.collect()}
     want_tables, want_cols = _python_oracle(postings, query)
     want_tables = {t: s for t, s in want_tables.items() if s > 0}
@@ -104,47 +102,18 @@ query3_strategy = st.lists(
 )
 
 
-@pytest.mark.parametrize("strategy", ["rare_key", "mapkey"])
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(postings=posting_strategy, query=query3_strategy)
-def test_seq_top2_matches_python_oracle_n3(spark, strategy, postings, query):
+def test_seq_top2_matches_python_oracle_n3(spark, postings, query):
     """Seq's top-2 dialect at n=3 — where it diverges from the default —
     against the direct-from-definition scorer with top_n=2."""
     pdf = spark.createDataFrame(
         postings, "key string, table int, column int, row bigint"
     )
     qdf = spark.createDataFrame(query, "a string, b string, c string")
-    tbl, _ = multi_attribute_join_search(
-        pdf, qdf, ["a", "b", "c"], strategy=strategy, top_n=2
-    )
+    tbl, _ = multi_attribute_join_search(pdf, qdf, ["a", "b", "c"], top_n=2)
     got = {r.table: r.join_score for r in tbl.collect()}
     want, _ = _python_oracle(postings, query, n_attrs=3, top_n=2)
     want = {t: s for t, s in want.items() if s > 0}
     assert got == want
 
-
-def test_row_cell_granularity_aliases_identical(spark):
-    """The reference's -row/-cell granularity strategies (main.py:19-21,
-    Seq_Search.py:153-166/:203-215) return results identical to
-    column-wise — the thesis's own finding, which is why the engine
-    exposes them as aliases of the default probe. This differential is
-    the citation the README/CLI subsumption note points at."""
-    postings = [
-        ("k0", 1, 0, 0), ("k1", 1, 1, 0), ("k2", 1, 0, 1),
-        ("k0", 2, 0, 0), ("k1", 2, 0, 1), ("k0", 2, 1, 1),
-        ("k3", 3, 2, 4), ("k0", 3, 0, 4), ("k1", 3, 1, 4),
-    ]
-    query = [("k0", "k1"), ("k2", "k3"), ("k0", "k0")]
-    pdf = spark.createDataFrame(postings, "key string, table int, column int, row bigint")
-    qdf = spark.createDataFrame(query, "a string, b string")
-    results = {}
-    for strategy in ("rare_key", "mapkey", "row", "cell"):
-        tbl, col = multi_attribute_join_search(pdf, qdf, ["a", "b"], strategy=strategy)
-        results[strategy] = (
-            [tuple(r) for r in tbl.collect()],
-            [tuple(r) for r in col.collect()],
-        )
-    base = results["rare_key"]
-    assert base[0], "fixture produced no matches"
-    for strategy, got in results.items():
-        assert got == base, f"strategy {strategy} diverged"

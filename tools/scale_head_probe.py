@@ -175,6 +175,12 @@ def main() -> None:
     args = ap.parse_args()
     if args.queries:
         want = {q.strip() for q in args.queries.split(",")}
+        unknown = sorted(want - {n for n, _ in HEAD_QUERIES})
+        if unknown:
+            ap.error(
+                f"unknown --queries {', '.join(unknown)}; "
+                f"choose from {', '.join(n for n, _ in HEAD_QUERIES)}"
+            )
         HEAD_QUERIES[:] = [(n, r) for n, r in HEAD_QUERIES if n in want]
     if args.build:
         build(args.replicas)
